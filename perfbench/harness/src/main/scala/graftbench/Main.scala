@@ -12,21 +12,19 @@ import org.apache.spark.sql.{BenchHooks, DataFrame, SparkSession}
 /** The benchmark's JVM side. One process, one caller, one query at a
   * time (closed loop) in `local[cores]`:
   *
-  *  1. set-up, three times: build the session, assemble the query
-  *     registry and read every input table once. The first is timed
-  *     from JVM start, the others after stopping the session;
-  *  2. an untimed JVM warm-up: one generic query over the inputs;
-  *  3. timed passes over the workload's queries until `--seconds` have
-  *     elapsed; the first pass always runs in full, in the listed order,
-  *     and cold, as a submitted batch job does; later passes run in a
-  *     seeded order. Each query is built, planned (`executedPlan` forced) and
-  *     fully written to the `noop` sink. After each call the
-  *     CacheManager entry count is recorded and the cache cleared, so
-  *     no call reads another's cached results. On the first pass, after
-  *     each timed write and untimed: the plan retention check, and the
-  *     same DataFrame written as parquet in `graft.Verify`'s layout for
-  *     the DuckDB oracle compare;
-  *  4. with `--trace 1`: one more pass that runs every query twice, once
+  *  1. set-up, timed from JVM start: build the session, assemble the
+  *     query registry, then one untimed warm-up pass over the
+  *     workload's queries in the listed order;
+  *  2. timed passes over the workload's queries, each in a seeded
+  *     order, until `--seconds` have elapsed (at least one). Each query
+  *     is built, planned (`executedPlan` forced) and fully written to
+  *     the `noop` sink. After each call the CacheManager entry count is
+  *     recorded and the cache cleared, so no call reads another's
+  *     cached results. On the first timed pass, after each timed write
+  *     and untimed, the plan retention check; after the timed passes,
+  *     the first pass's DataFrames written as parquet in `graft.Verify`'s
+  *     layout for the DuckDB oracle compare;
+  *  3. with `--trace 1`: one more pass that runs every query twice, once
   *     traced and once not (alternating which goes first), then the
   *     single-layer probes.
   *
@@ -57,19 +55,6 @@ object Main {
     val wl = Workloads(opts.workload)
     val jvmStart = ManagementFactory.getRuntimeMXBean.getStartTime
 
-    // 1. Set-up, three times.
-    var spark = session(opts)
-    val setups = mutable.ArrayBuffer((System.currentTimeMillis() - jvmStart) / 1e3)
-    for (_ <- 1 to 2) {
-      spark.stop()
-      val t0 = System.nanoTime()
-      spark = session(opts)
-      setups += (System.nanoTime() - t0) / 1e9
-    }
-    val w0 = System.nanoTime()
-    warmUp(spark, opts)
-    val warmupS = (System.nanoTime() - w0) / 1e9
-    val rng = new scala.util.Random(opts.seed)
     val failures = mutable.ArrayBuffer.empty[String]
     val execs = mutable.ArrayBuffer.empty[Exec]
     def record(e: Exec): Exec = {
@@ -78,44 +63,57 @@ object Main {
       e
     }
 
-    // 2. Timed passes; the first also checks and verifies every call.
+    // 1. Set-up: JVM start through session build and warm-up.
+    val spark = GraftSession.local(opts.cores, "graftbench")
+    spark.sparkContext.setLogLevel("WARN")
+    SparkEntry.queries
+    val startS = (System.currentTimeMillis() - jvmStart) / 1e3
+    // The untimed JIT warm-up: one pass over the workload's queries in
+    // the listed order, then a wait for the JIT compiler to finish what
+    // that pass queued, so the timed passes run compiled code.
+    val w0 = System.nanoTime()
+    wl.queries.foreach(q => run(spark, wl, opts, q, -1, traced = false, None)
+      .error.foreach(m => failures += s"$q (warm-up): $m"))
+    awaitJitIdle()
+    val warmupS = (System.nanoTime() - w0) / 1e9
+    val setupS = (System.currentTimeMillis() - jvmStart) / 1e3
+    val rng = new scala.util.Random(opts.seed)
+
+    // 2. Timed passes; the first also checks every call's plan and
+    // keeps its DataFrame, written out for the oracle after the passes.
     val verify = new VerifyOutput(s"${opts.out}/verify")
+    val outputs = mutable.LinkedHashMap.empty[String, DataFrame]
     val capture = new WriteCapture
     spark.listenerManager.register(capture)
     val heap = new HeapWatch
-    val complete = mutable.ArrayBuffer.empty[Int]
     val deadline = System.nanoTime() + (opts.seconds * 1e9).toLong
     var pass = 0
     while (pass == 0 || System.nanoTime() < deadline) {
-      var full = true
-      // The cold first pass runs in the listed order, so its cold-code
-      // cost falls on the same queries in every run; later passes are
-      // shuffled by the seed.
-      val order = if (pass == 0) wl.queries else rng.shuffle(wl.queries)
-      for (q <- order if full) {
-        if (pass > 0 && System.nanoTime() >= deadline) full = false
-        else {
-          val first = pass == 0
-          val e = record(run(spark, wl, opts, q, pass, traced = false,
-            if (first) Some(df => {
-              retention(spark, q, df, capture).foreach(failures += _)
-              verify.write(q, df)
-            }) else None))
-          if (first) e.error.foreach(verify.failed(q, _))
-        }
+      val first = pass == 0
+      for (q <- rng.shuffle(wl.queries)) {
+        val e = record(run(spark, wl, opts, q, pass, traced = false,
+          if (first) Some(df => {
+            retention(spark, q, df, capture).foreach(failures += _)
+            outputs(q) = df
+          }) else None))
+        if (first) e.error.foreach(verify.failed(q, _))
       }
-      if (full) complete += pass
       pass += 1
     }
     heap.stop()
     spark.listenerManager.unregister(capture)
+    for ((q, df) <- outputs)
+      try verify.write(q, df)
+      catch { case ex: Throwable => verify.failed(q, describe(ex)) }
+    outputs.clear()
+    cleanUp(spark)
     verify.finish(wl.queries)
 
-    val timed = execs.filter(e => e.ok && complete.contains(e.pass)).toSeq
+    val timed = execs.filter(_.ok).toSeq
     val querySamples = timed.map(_.totalS)
     val endToEnd = Map(
-      "pass_s" -> median(complete.toSeq.map(p => timed.filter(_.pass == p).map(_.totalS).sum)),
-      "setup_s" -> median(setups.toSeq))
+      "pass_s" -> median((0 until pass).map(p => timed.filter(_.pass == p).map(_.totalS).sum)),
+      "setup_s" -> setupS)
 
     // 3. Traced: one more pass, each query once traced and once not.
     val perLayer: Seq[(String, Any)] = if (!opts.trace) Nil else {
@@ -129,13 +127,13 @@ object Main {
       val traced = paired.filter(e => e.traced && e.ok)
       val tracedS = traced.map(_.totalS).sum
       val untracedS = paired.filter(e => !e.traced && e.ok).map(_.totalS).sum
-      Json.write(s"${opts.out}/trace.json", spans(tr, wl, traced))
+      writeJson(s"${opts.out}/trace.json", spans(tr, wl, traced))
       val layers = layerMetrics(tr, wl, opts, traced) ++
         Probes.operators(spark, opts.data) :+
         ("sources.scan_s" -> Probes.scan(spark, opts.data, wl.tables))
       System.gc()
       layers ++ Seq(
-        "jvm.start_s" -> setups.head,
+        "jvm.start_s" -> startS,
         "jvm.warmup_s" -> warmupS,
         "jvm.peak_heap_mb" -> heap.peakMb,
         "jvm.live_heap_mb" ->
@@ -147,18 +145,18 @@ object Main {
         "trace.overhead_frac" -> (tracedS / untracedS - 1.0))
     }
 
-    Json.write(s"${opts.out}/result.json", Map(
+    writeJson(s"${opts.out}/result.json", Map(
       "workload" -> wl.name,
       "queries" -> wl.queries,
       "cores" -> opts.cores,
       "heap_max_mb" -> Runtime.getRuntime.maxMemory / 1048576L,
       "seed" -> opts.seed,
-      "passes" -> complete.size,
+      "passes" -> pass,
       "attempted" -> execs.size,
       "failed" -> failures.size,
       "failures" -> failures.toSeq,
       "query_s.samples" -> querySamples.size,
-      "setup_s" -> setups.toSeq,
+      "setup_s" -> setupS,
       "calls" -> execs.toSeq.map(e => Map("query" -> e.query, "pass" -> e.pass,
         "traced" -> e.traced, "build_s" -> e.buildS, "plan_s" -> e.planS,
         "exec_s" -> e.execS, "ok" -> e.ok)),
@@ -168,6 +166,11 @@ object Main {
     sys.exit(0)
   }
 
+  /** Writes maps, sequences, strings, booleans and numbers as JSON. */
+  def writeJson(path: String, v: Any): Unit =
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path),
+      org.json4s.jackson.Serialization.write(v.asInstanceOf[AnyRef])(org.json4s.DefaultFormats) + "\n")
+
   private def parse(args: Array[String]): Opts = {
     val m = args.grouped(2).collect { case Array(k, v) => k.stripPrefix("--") -> v }.toMap
     def need(k: String) = m.getOrElse(k, throw new IllegalArgumentException(s"missing --$k"))
@@ -175,36 +178,17 @@ object Main {
       need("seconds").toDouble, need("trace") == "1", need("cores").toInt)
   }
 
-  private val InputTables = Seq("region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
-  /** A session with graft's defaults, the query registry assembled and
-    * every input table read once in full (the one-time reader and job
-    * start-up the first query would otherwise pay).
-    */
-  private def session(opts: Opts): SparkSession = {
-    val spark = GraftSession.local(opts.cores, "graftbench")
-    spark.sparkContext.setLogLevel("WARN")
-    SparkEntry.queries
-    val t = graft.sources.Tables(spark, opts.data)
-    InputTables.foreach(t.table(_).write.format("noop").mode("overwrite").save())
-    spark
-  }
-
-  /** Untimed JVM warm-up before the first pass: one generic shuffle
-    * aggregate, join, window and explode over the inputs, so the first
-    * timed query does not pay the engine-wide one-time costs (class
-    * loading, planner and code generator start-up) for all the others.
-    */
-  private def warmUp(spark: SparkSession, opts: Opts): Unit = {
-    import org.apache.spark.sql.expressions.Window
-    import org.apache.spark.sql.functions._
-    val t = graft.sources.Tables(spark, opts.data)
-    t.lineitem.groupBy("l_orderkey").agg(collect_list("l_quantity").as("qs"))
-      .join(t.orders, col("l_orderkey") === col("o_orderkey"))
-      .withColumn("q", explode(col("qs")))
-      .withColumn("r", row_number().over(Window.partitionBy("o_custkey").orderBy("q")))
-      .write.format("noop").mode("overwrite").save()
+  /** Waits until the JIT compiler has been idle for 0.5 s, at most 10 s. */
+  private def awaitJitIdle(): Unit = {
+    val jit = ManagementFactory.getCompilationMXBean
+    val deadline = System.nanoTime() + 10000000000L
+    var last = jit.getTotalCompilationTime
+    var idleSince = System.nanoTime()
+    while (System.nanoTime() - idleSince < 500000000L && System.nanoTime() < deadline) {
+      Thread.sleep(50)
+      val now = jit.getTotalCompilationTime
+      if (now != last) { last = now; idleSince = System.nanoTime() }
+    }
   }
 
   private def describe(ex: Throwable): String =
@@ -426,8 +410,8 @@ final class VerifyOutput(dir: String) {
   def failed(q: String, msg: String): Unit = errors(q) = msg
 
   def finish(queries: Seq[String]): Unit = {
-    Json.write(s"$dir/oracle_sql.json",
+    Main.writeJson(s"$dir/oracle_sql.json",
       scala.collection.immutable.ListMap(queries.map(q => q -> SparkEntry.oracleSql(q)): _*))
-    Json.write(s"$dir/_errors.json", errors)
+    Main.writeJson(s"$dir/_errors.json", errors)
   }
 }

@@ -1,7 +1,7 @@
 #!/usr/bin/env python3
-"""graft's benchmark: one command that builds the engine, generates the
-inputs from a seed, times a workload, checks its outputs against the
-DuckDB oracle and prints every metric with its unit.
+"""graft's benchmark: one command that builds the engine, times a
+workload over the fixed test tables in perfbench/data, checks its
+outputs against the DuckDB oracle and prints every metric with its unit.
 
     python3 perfbench/run.py --workload assoc_chain --seed 1 --seconds 10 --trace 0
 
@@ -10,7 +10,8 @@ JSON object: {"correct", "attempted", "failed", "metrics"}. With
 --trace 0 the metrics are the end-to-end ones; with --trace 1 they are
 the per-layer ones (the traced run also writes its span tree to
 .bench_run/<run>/trace.json). The line before it carries the run facts:
-cores, heap, scale, seed and the source digest.
+cores, heap, scale, seed and the source digest (the engine's and the
+benchmark's own sources and data).
 
 The first run builds the engine and the harness with sbt (the root build
 plus perfbench/harness); later runs reuse the build while the sources
@@ -27,9 +28,6 @@ import subprocess
 import sys
 import time
 
-sys.dont_write_bytecode = True  # keep the checkout free of __pycache__
-import gen_data  # noqa: E402
-
 ROOT = os.getcwd()
 HERE = os.path.dirname(os.path.abspath(__file__))
 HARNESS = os.path.join(HERE, "harness")
@@ -37,8 +35,9 @@ BUILD_DIR = os.path.join(ROOT, ".bench_build")
 RUN_DIR = os.path.join(ROOT, ".bench_run")
 
 WORKLOADS = ("assoc_chain", "curation_iter")
-# TPC-H scale factor of the generated tables (lineitem = 6000 rows).
+# The engine's sf0.001 test tables (lineitem 6,000 rows), read unchanged.
 SCALE = 0.001
+DATA = os.path.join(HERE, "data", "sf0.001")
 # A run, build excluded, must end inside three minutes.
 JVM_TIMEOUT_S = 145
 ORACLE_TIMEOUT_S = 25
@@ -102,7 +101,10 @@ PER_LAYER = {
 }
 
 # What sbt compiles: the engine's sources and build, and the harness.
-SOURCES = ["build.sbt", "project", "src/main", os.path.relpath(HARNESS, ROOT)]
+BUILD_SOURCES = ["build.sbt", "project", "src/main", os.path.relpath(HARNESS, ROOT)]
+# What else decides a run's figures: this script, the oracle and the data.
+RUN_SOURCES = BUILD_SOURCES + [os.path.relpath(p, ROOT) for p in (__file__, DATA)] + [
+    "tools/oracle_check.py"]
 
 # JDK 17 module opens Spark needs outside spark-submit (as in build.sbt).
 ADD_OPENS = [f"--add-opens=java.base/{p}=ALL-UNNAMED" for p in (
@@ -149,9 +151,9 @@ def run_child(cmd, cwd, timeout, log_path, env=None):
             _children.remove(p)
 
 
-def source_digest():
+def source_digest(sources):
     h = hashlib.sha256()
-    for rel in SOURCES:
+    for rel in sources:
         path = os.path.join(ROOT, rel)
         files = [path] if os.path.isfile(path) else sorted(
             os.path.join(d, f) for d, dirs, fs in os.walk(path)
@@ -238,16 +240,13 @@ def main():
     for sig in (signal.SIGTERM, signal.SIGINT, signal.SIGHUP):
         signal.signal(sig, on_signal)
 
-    digest = source_digest()
-    classpath = build(digest)
+    classpath = build(source_digest(BUILD_SOURCES))
+    digest = source_digest(RUN_SOURCES)
 
     shutil.rmtree(RUN_DIR, ignore_errors=True)
     out = os.path.join(RUN_DIR, f"{args.workload}-{args.seed}-t{args.trace}")
-    data = os.path.join(out, "data")
     for d in ("tmp", "spark-local", "warehouse"):
         os.makedirs(os.path.join(out, d))
-    t0 = time.time()
-    gen_data.write(data, args.seed, SCALE)
     t1 = time.time()
 
     cores = len(os.sched_getaffinity(0))
@@ -259,7 +258,7 @@ def main():
            f"-Dspark.sql.warehouse.dir={out}/warehouse",
            "-Dspark.ui.enabled=false",
            "-cp", classpath, "graftbench.Main",
-           "--workload", args.workload, "--data", data, "--out", out,
+           "--workload", args.workload, "--data", DATA, "--out", out,
            "--seed", str(args.seed), "--seconds", str(args.seconds),
            "--trace", str(args.trace), "--cores", str(cores)]
     env = dict(os.environ, SPARK_GRAFT_CPUS=str(cores))
@@ -272,13 +271,17 @@ def main():
         res = json.load(f)
 
     t2 = time.time()
-    bad = oracle_check(data, out, res["queries"])
+    bad = oracle_check(DATA, out, res["queries"])
     t3 = time.time()
-    failures = res["failures"] + bad
+    # One entry per failing query: a call that threw on the first pass
+    # also shows in the oracle compare as that query's VERIFY-ERR.
+    failures = {}
+    for f in res["failures"] + bad:
+        failures.setdefault(f.split(":", 1)[0], []).append(f)
     info = {k: res[k] for k in ("workload", "cores", "heap_max_mb", "seed", "passes",
                                 "query_s.samples", "setup_s")}
     info.update(scale=SCALE, source_digest=digest, failures=failures,
-                wall_s={"inputs": t1 - t0, "jvm": t2 - t1, "oracle": t3 - t2})
+                wall_s={"jvm": t2 - t1, "oracle": t3 - t2})
     if args.trace:
         info["trace"] = os.path.relpath(os.path.join(out, "trace.json"), ROOT)
     print(json.dumps({"info": info}))
@@ -290,7 +293,7 @@ def main():
         fail(f"harness did not report {sorted(missing)}")
     print(json.dumps({
         "correct": not failures,
-        "attempted": res["attempted"] + len(res["queries"]),
+        "attempted": res["attempted"],
         "failed": len(failures),
         "metrics": {k: {"value": values[k], "unit": u} for k, u in units.items()},
     }))
